@@ -29,8 +29,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import char_shingles, tokens_ws
+from .graph import _materialize_truncated, _TruncatedFrame
 from .width import ensure_wide
 
 # canonical implementation lives in operators/width.py (shared by the
@@ -287,17 +289,25 @@ def dedup_minhash(
     num_bands: int = 32,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard_est ≥ threshold).
+    """Near-duplicate pairs (id_a < id_b, jaccard_est ≥ threshold),
+    returned persisted and materialized; the caller owns that cache.
 
     The signature frame feeds the banding AND both sides of the
     verification join — persist it so the shingle+128-min aggregation
     runs once, not three times (signatures are ~1 KB/doc: safely
-    cacheable at any scale, spills to disk if not)."""
+    cacheable at any scale, spills to disk if not). It is released once
+    the pairs are materialized: left cached, every call on new documents
+    would pin another signature frame for the life of the session."""
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k).persist()
-    pairs = minhash_candidate_pairs(sigs, num_bands)
-    return minhash_estimate_jaccard(pairs, sigs).where(
-        F.col("jaccard_est") >= threshold
-    )
+    try:
+        pairs = minhash_candidate_pairs(sigs, num_bands)
+        pairs = minhash_estimate_jaccard(pairs, sigs).where(
+            F.col("jaccard_est") >= threshold
+        ).persist()
+        pairs.count()
+    finally:
+        sigs.unpersist()
+    return pairs
 
 
 def verify_pairs_exact_jaccard(
@@ -749,6 +759,29 @@ def _write_sig_version(store_path: str) -> None:
 # ---------------------------------------------------------------------------
 
 
+#: symmetric edge rows up to which :func:`dedup_clusters` runs its
+#: rounds on the driver: there a small pair graph costs microseconds,
+#: where the distributed loop pays ~20 Spark jobs of fixed cost
+_LOCAL_MAX_EDGES = 20_000
+
+
+def _propagate_local(edges: list, max_iters: int) -> tuple[dict, bool]:
+    """The rounds of :func:`dedup_clusters` over collected symmetric
+    edges: the same labels after the same number of rounds, so the
+    convergence contract is unchanged. Returns (labels, converged)."""
+    nbrs: dict = {}
+    for a, b in edges:
+        nbrs.setdefault(a, [a]).append(b)  # self-loop first
+    label = {v: v for v in nbrs}
+    for _ in range(max_iters):
+        prop = {v: min(label[u] for u in us) for v, us in nbrs.items()}
+        new = {v: min(c, prop[c]) for v, c in prop.items()}
+        if new == label:
+            return new, True
+        label = new
+    return label, False
+
+
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 20,
@@ -773,7 +806,9 @@ def dedup_clusters(
     changed labels). If the fixpoint is not reached within
     ``max_iters``, partial clusters would silently retain duplicates —
     so that raises unless ``require_convergence=False`` (then it warns
-    and returns the partial labels).
+    and returns the partial labels). A graph of at most
+    ``_LOCAL_MAX_EDGES`` symmetric edges runs the same rounds on the
+    driver after the edge checkpoint (:func:`_propagate_local`).
 
     ``pairs_distinct=True`` skips the defensive ``distinct`` on the
     symmetric edge frame: a canonical ``id_a < id_b`` pair list that is
@@ -781,8 +816,6 @@ def dedup_clusters(
     construction, so the dedup shuffle would be a pure no-op pass over
     the heaviest frame in the loop (every LSH pair generator in this
     module emits exactly that shape)."""
-    from .graph import _materialize_truncated
-
     # Evaluate the pair frame EXACTLY ONCE. The pair plan is usually
     # the whole LSH + exact-verify pipeline; the old spelling
     # (pairs ∪ pairs-reversed, then nodes derived from that union and
@@ -805,6 +838,19 @@ def dedup_clusters(
     if not pairs_distinct:
         sym_raw = sym_raw.distinct()
     sym = _materialize_truncated(sym_raw)
+    head = sym.limit(_LOCAL_MAX_EDGES + 1).collect()
+    if len(head) <= _LOCAL_MAX_EDGES:
+        id_type = sym.schema["id_a"].dataType
+        sym.unpersist()
+        label, converged = _propagate_local(head, max_iters)
+        if not converged:
+            _unconverged(max_iters, require_convergence)
+        return pairs.sparkSession.createDataFrame(
+            list(label.items()),
+            T.StructType(
+                [T.StructField("id", id_type), T.StructField("cluster", id_type)]
+            ),
+        )
     # SELF-LOOP FOLD: append one (id, id) row per node so the per-round
     # neighbor-min aggregate sees the node's OWN label through its
     # self-loop — least(own, nbr_min) then needs no |V|-sized left join
@@ -893,37 +939,47 @@ def dedup_clusters(
             converged = True
             break
     if not converged:
-        msg = (
-            f"dedup_clusters did not reach a fixpoint in {max_iters} "
-            "iterations (a component has diameter > max_iters); the "
-            "partial labels would keep extra duplicates"
-        )
-        if require_convergence:
+        try:
+            _unconverged(max_iters, require_convergence)
+        except RuntimeError:
             sym.unpersist()
             loops.unpersist()
             if prev_round is not None:
                 prev_round.unpersist()
-            raise RuntimeError(msg + " — raise max_iters")
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
+            raise
     # the returned labels read only the final round's checkpoint; the
     # edge checkpoints' blocks are consumed
     sym.unpersist()
     loops.unpersist()
-    return labels
+    # labels.unpersist() releases that final checkpoint
+    return _TruncatedFrame(labels, prev_round)
+
+
+def _unconverged(max_iters: int, require_convergence: bool) -> None:
+    msg = (
+        f"dedup_clusters did not reach a fixpoint in {max_iters} "
+        "iterations (a component has diameter > max_iters); the "
+        "partial labels would keep extra duplicates"
+    )
+    if require_convergence:
+        raise RuntimeError(msg + " — raise max_iters")
+    import warnings
+
+    warnings.warn(msg, stacklevel=3)
 
 
 def keep_representatives(
     df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Drop every near-dup cluster member except the min-id survivor
-    (the complete dedup: pairs → components → one kept per group)."""
+    (the complete dedup: pairs → components → one kept per group).
+    The result reads the components' pinned checkpoint; its
+    ``unpersist()`` releases that too."""
     clusters = dedup_clusters(pairs)
     losers = clusters.where(F.col("id") != F.col("cluster")).select(
         F.col("id").alias(id_col)
     )
-    return df.join(losers, id_col, "left_anti")
+    return _TruncatedFrame(df.join(losers, id_col, "left_anti"), clusters)
 
 
 def keep_best_representatives(

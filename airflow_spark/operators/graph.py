@@ -38,17 +38,21 @@ from pyspark.sql.classic.dataframe import (  # noqa: E402
 
 
 class _TruncatedFrame(_ClassicDataFrame):
-    """A localCheckpoint-backed materialized frame whose ``unpersist()``
-    releases the pinned checkpoint blocks. After unpersist the frame is
-    NOT recomputable (its lineage was truncated away) — callers only
-    ever unpersist superseded or fully-consumed iteration frames."""
+    """A frame that reads localCheckpoint-pinned blocks, whose
+    ``unpersist()`` releases its own cache (if any) AND those blocks.
+    ``pinned`` are what ``unpersist(blocking)`` is forwarded to: the
+    checkpoint's RDD, or frames built over checkpoints. After unpersist
+    the frame is NOT recomputable (its lineage was truncated away) —
+    callers only ever unpersist superseded or fully-consumed frames."""
 
-    def __init__(self, df: DataFrame, jrdd) -> None:
+    def __init__(self, df: DataFrame, *pinned) -> None:
         super().__init__(df._jdf, df.sparkSession)
-        self._ckpt_jrdd = jrdd
+        self._pinned = pinned
 
     def unpersist(self, blocking: bool = False) -> DataFrame:
-        self._ckpt_jrdd.unpersist(blocking)
+        super().unpersist(blocking)
+        for p in self._pinned:
+            p.unpersist(blocking)
         return self
 
 

@@ -27,11 +27,12 @@ import datetime as dt
 import logging
 import time
 from collections.abc import Callable
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .notifier import LogNotifier, Notifier
 
@@ -59,6 +60,26 @@ class Context:
     #: pipeline name + state store, for cross-run XCom pulls
     pipeline: str = ""
     state_store: Any = None
+    #: frames cached through :meth:`persist`, released when the run ends
+    _cached: list = field(default_factory=list, init=False, repr=False)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` for the rest of this run, so downstream tasks
+        read it instead of recomputing its lineage. ``Pipeline.run``
+        unpersists it once the run ends, whether the run succeeded or
+        failed."""
+        df.persist()
+        self._cached.append(df)
+        return df
+
+    @contextmanager
+    def _cache_scope(self):
+        try:
+            yield
+        finally:
+            for df in self._cached:
+                df.unpersist()
+            self._cached.clear()
 
     def var(self, key: str, default: str | None = None) -> str | None:
         """Variable.get analog (S5) with default."""
@@ -439,7 +460,11 @@ class Pipeline:
         #: deferred sensors parked off the worker pool (triggerer
         #: analog): name -> {check, deadline, next, t0, pokes}
         deferred: dict[str, dict] = {}
-        with ThreadPoolExecutor(max_workers=self.max_parallel_tasks) as pool:
+        # the pool exits first (waiting out running tasks), then the
+        # run's cached frames are released — on the error path too
+        with ctx._cache_scope(), ThreadPoolExecutor(
+            max_workers=self.max_parallel_tasks
+        ) as pool:
             while pending or running or deferred:
                 # higher priority submits first; ties by name (Airflow
                 # priority_weight semantics under a full executor)

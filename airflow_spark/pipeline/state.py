@@ -2,9 +2,19 @@
 
 The reference persists DAG runs / task instances / XCom in Postgres
 (compose.yml:129-145). Here the engine appends one parquet record per
-run under a state dir — queryable with the same engine it orchestrates
-— plus a retention vacuum (O13/K4 analog: Airflow-Cleanup's 7-day
-file retention, dags/Airflow_Cleanup.py:46-58).
+run under a local state dir, plus a retention vacuum (O13/K4 analog:
+Airflow-Cleanup's 7-day file retention, dags/Airflow_Cleanup.py:46-58).
+
+Records are appended WITHOUT Spark: a one-row Spark parquet write is a
+whole write job, about 1 s of fixed cost per table on a 4-core local
+session, paid on every run commit. Each append is one parquet file
+written on the driver with pyarrow under a hidden temp name
+(``.``-prefixed, which Spark's file listing skips) and ``os.replace``d
+into place, so a reader sees an append whole or not at all; the state
+dir is a local filesystem path. Reads (``runs``, ``xcom_pull``,
+``run_stats``, ``sla_misses``) and ``vacuum`` stay on Spark: the
+records are queryable with the engine they describe, and files Spark
+wrote earlier (INT96 timestamps) read as the same table.
 """
 
 from __future__ import annotations
@@ -12,7 +22,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,6 +52,75 @@ XCOM_SCHEMA = T.StructType(
 )
 
 
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.DoubleType(): pa.float64(),
+    # UTC-adjusted micros: Spark reads it back as TimestampType
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+
+
+def _append(path: str, schema: T.StructType, rows: list[tuple]) -> None:
+    """Append ``rows`` to the parquet table at ``path`` as one new file,
+    published atomically by rename."""
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows],
+        schema=pa.schema([(f.name, _ARROW_TYPES[f.dataType]) for f in schema]),
+    )
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
+def _utc(ts: dt.datetime) -> dt.datetime:
+    """``ts`` as aware UTC; naive means UTC already. pyarrow stores an
+    aware datetime's wall clock as if it were UTC, so convert first."""
+    return ts.astimezone(dt.timezone.utc) if ts.tzinfo else ts
+
+
+def _run_row(pipeline_name: str, run) -> tuple:
+    return (
+        pipeline_name,
+        run.run_id,
+        run.status,
+        _utc(run.started),
+        float(run.elapsed),
+        json.dumps(
+            {
+                k: {
+                    "status": v.status,
+                    "attempts": v.attempts,
+                    "elapsed_s": v.elapsed,
+                    "error": v.error,
+                }
+                for k, v in run.tasks.items()
+            }
+        ),
+    )
+
+
+# -- XCom persistence (Airflow metadata-DB XCom table analog,
+# compose.yml:129-145): small JSON-serializable task outputs are
+# durable per (pipeline, run_id, task), so a later run / backfill /
+# resume can consume a prior run's outputs via ``xcom_pull`` or
+# ``ctx.xcom_prev``. DataFrames and other non-JSON values are
+# deliberately NOT persisted — heavy data belongs in table sinks,
+# XCom is a control-plane channel.
+
+
+def _xcom_rows(pipeline_name: str, run) -> list[tuple]:
+    rows = []
+    for task, val in (getattr(run, "outputs", None) or {}).items():
+        try:
+            payload = json.dumps(val)
+        except (TypeError, ValueError):
+            continue  # non-JSON output (e.g. a DataFrame): skip
+        rows.append((pipeline_name, run.run_id, task, payload, _utc(run.started)))
+    return rows
+
+
 class RunStateStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -50,59 +132,10 @@ class RunStateStore:
         os.makedirs(path, exist_ok=True)
 
     def record_run(self, pipeline, run) -> None:
-        row = [
-            (
-                pipeline.name,
-                run.run_id,
-                run.status,
-                run.started.replace(tzinfo=None),
-                float(run.elapsed),
-                json.dumps(
-                    {
-                        k: {
-                            "status": v.status,
-                            "attempts": v.attempts,
-                            "elapsed_s": v.elapsed,
-                            "error": v.error,
-                        }
-                        for k, v in run.tasks.items()
-                    }
-                ),
-            )
-        ]
-        df = self.spark.createDataFrame(row, RUN_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
-        self._record_xcom(pipeline.name, run)
-
-    # -- XCom persistence (Airflow metadata-DB XCom table analog,
-    # compose.yml:129-145): small JSON-serializable task outputs are
-    # durable per (pipeline, run_id, task), so a later run / backfill /
-    # resume can consume a prior run's outputs via ``xcom_pull`` or
-    # ``ctx.xcom_prev``. DataFrames and other non-JSON values are
-    # deliberately NOT persisted — heavy data belongs in table sinks,
-    # XCom is a control-plane channel.
-
-    def _record_xcom(self, pipeline_name: str, run) -> None:
-        outputs = getattr(run, "outputs", None) or {}
-        rows = []
-        for task, val in outputs.items():
-            try:
-                payload = json.dumps(val)
-            except (TypeError, ValueError):
-                continue  # non-JSON output (e.g. a DataFrame): skip
-            rows.append(
-                (
-                    pipeline_name,
-                    run.run_id,
-                    task,
-                    payload,
-                    run.started.replace(tzinfo=None),
-                )
-            )
-        if rows:
-            self.spark.createDataFrame(rows, XCOM_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.xcom_path)
+        _append(self.path, RUN_SCHEMA, [_run_row(pipeline.name, run)])
+        xcoms = _xcom_rows(pipeline.name, run)
+        if xcoms:
+            _append(self.xcom_path, XCOM_SCHEMA, xcoms)
 
     def task_statuses(self, pipeline: str, run_id: str) -> dict:
         """Per-task status map of one recorded run (parsed from the

@@ -11,6 +11,11 @@ Stages (each a task = one Spark job, with expectations as gates):
 Shuffle budget: exact dedup shuffles md5 keys; near-dedup shuffles
 minhash signatures; everything else is projections. The publish step
 writes a partitioned parquet table.
+
+The exact, near-dedup and annotated stages are cached for the run
+(``ctx.persist``): each stage's count, and the publish write, read the
+stage above instead of recomputing the whole lineage; the run releases
+the caches when it ends.
 """
 
 from __future__ import annotations
@@ -50,7 +55,7 @@ def build_corpus_pipeline(
     @p.task(depends_on=["profile"])
     def exact_dedup(ctx: Context) -> dict:
         docs = ctx.outputs["_docs"]
-        kept = dedup.dedup_exact_text(docs)
+        kept = ctx.persist(dedup.dedup_exact_text(docs))
         ctx.outputs["_exact"] = kept
         return {"n_after_exact": kept.count()}
 
@@ -59,10 +64,13 @@ def build_corpus_pipeline(
         docs: DataFrame = ctx.outputs["_exact"]
         thr = float(ctx.param("near_dup_threshold"))
         pairs = dedup.dedup_minhash(docs, threshold=thr)
-        # exact survivor selection: pairs → connected components →
-        # min-id survivor per component (pair-wise dropping would keep
-        # extra members of chain-shaped components)
-        kept = dedup.keep_representatives(docs, pairs)
+        try:
+            # exact survivor selection: pairs → connected components →
+            # min-id survivor per component (pair-wise dropping would
+            # keep extra members of chain-shaped components)
+            kept = ctx.persist(dedup.keep_representatives(docs, pairs))
+        finally:
+            pairs.unpersist()  # the components are materialized
         ctx.outputs["_near"] = kept
         return {"n_after_near": kept.count()}
 
@@ -79,7 +87,9 @@ def build_corpus_pipeline(
     @p.task(depends_on=["quality_filter"])
     def annotate(ctx: Context) -> dict:
         docs = ctx.outputs["_quality"]
-        out = text.with_fingerprint(text.with_token_counts(text.with_lang_id(docs)))
+        out = ctx.persist(
+            text.with_fingerprint(text.with_token_counts(text.with_lang_id(docs)))
+        )
         ctx.outputs["_final"] = out
         return {"n_final": out.count()}
 
@@ -180,7 +190,7 @@ def build_ingest_pipeline(
         # persist: the dedup plan scans history + builds the bloom
         # bitset — the count here and the publish write must not each
         # re-run it
-        fresh = fresh.persist()
+        fresh = ctx.persist(fresh)
         n = fresh.count()
         ctx.outputs["_fresh"] = fresh
         ctx.outputs["_n_fresh"] = n
@@ -192,7 +202,6 @@ def build_ingest_pipeline(
         n = int(ctx.outputs["_n_fresh"])  # counted once upstream
         if n:
             fresh.write.mode("append").parquet(history_dir)
-        fresh.unpersist()
         return {"n_published": n}
 
     return p

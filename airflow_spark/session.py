@@ -60,6 +60,20 @@ if os.environ.get("SPARK_GRAFT_RUNTIME_FILTERS", "") in ("1", "true"):
     _SESSION_CONFS.update(_RUNTIME_FILTER_CONFS)
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 32g. In local mode the
+    "driver" heap IS the whole executor pool: 8g across 32 task threads
+    put long benches under GC pressure (measured 2x run-to-run swings
+    on the LSH tail), and the deploy target has 128 GiB, hence the 32g
+    cap. A fixed 32g let the JVM grow past physical memory on a 16 GB
+    host and be OOM-killed by the kernel."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "32g"
+    return f"{min(32 * 1024, total // 2**21)}m"
+
+
 def normalize_session(spark: SparkSession) -> SparkSession:
     """Apply required session confs to an existing session (idempotent)."""
     for k, v in _SESSION_CONFS.items():
@@ -94,13 +108,9 @@ def get_session(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # local-mode "driver" heap IS the whole executor pool: 8g across
-        # 32 task threads put long benches under GC pressure (measured
-        # 2x run-to-run swings on the LSH tail); the deploy target has
-        # 128 GiB, so default to a quarter of it
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
         # keep stage-progress bars off stdout/stderr: the bench contract

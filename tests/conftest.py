@@ -19,6 +19,18 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def persisted_ids(spark):
+    """Ids of the RDDs the session holds persisted: DataFrame caches and
+    localCheckpoint blocks alike."""
+
+    def ids() -> set[int]:
+        jmap = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jmap.keySet().toArray()}
+
+    return ids
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

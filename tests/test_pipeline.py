@@ -22,7 +22,8 @@ from airflow_spark.pipeline import (
     expect_schema,
     next_fire,
 )
-from airflow_spark.pipeline.core import Param
+from airflow_spark.pipeline import state as _state
+from airflow_spark.pipeline.core import Param, PipelineRun, TaskResult
 from airflow_spark.pipeline.scheduler import latest_fire_in
 
 UTC = dt.timezone.utc
@@ -44,6 +45,32 @@ def test_topo_order_and_xcom(spark):
 
     run = p.test(spark)
     assert run.ok and seen == ["a", "b"]
+
+
+@pytest.mark.parametrize("fail", [False, True])
+def test_ctx_persist_is_released_when_the_run_ends(spark, persisted_ids, fail):
+    p = Pipeline("cached")
+    seen = {}
+
+    @p.task
+    def make(ctx):
+        df = ctx.persist(ctx.spark.range(100).selectExpr("id * 2 AS v"))
+        ctx.outputs["_df"] = df
+        return df.count()
+
+    @p.task(depends_on=["make"])
+    def use(ctx):
+        seen["during"] = persisted_ids()
+        if fail:
+            raise RuntimeError("boom")
+        return ctx.outputs["_df"].count()
+
+    before = persisted_ids()
+    run = p.run(spark)
+    assert run.ok is not fail
+    assert seen["during"] - before, "the frame was never cached"
+    assert persisted_ids() - before == set()
+    assert run.outputs["make"] == 100
 
 
 def test_retries_then_success(spark):
@@ -263,6 +290,158 @@ def test_state_store_records_and_vacuums(spark, tmp_path):
     # zero retention drops all
     kept = store.vacuum(dt.timedelta(seconds=0))
     assert kept == 0
+
+
+def _recorded_runs() -> list[PipelineRun]:
+    """Three runs an hour apart: a success, a failure with a retry, a
+    slow success; JSON outputs plus one that is not JSON."""
+    base = dt.datetime(2026, 3, 1, 12, 0, 0, 123456, tzinfo=UTC)
+    out = []
+    for i, (status, elapsed) in enumerate(
+        [("success", 1.5), ("failed", 9.25), ("success", 12.0)]
+    ):
+        tasks = {
+            "a": TaskResult("a", "success", attempts=1, elapsed=0.5),
+            "b": TaskResult(
+                "b", status, attempts=2, elapsed=elapsed,
+                error=None if status == "success" else "ValueError: boom",
+            ),
+        }
+        out.append(
+            PipelineRun(
+                run_id=f"r{i}", status=status, tasks=tasks,
+                started=base + dt.timedelta(hours=i), elapsed=elapsed,
+                outputs={"a": {"n": i}, "b": [i, "x"], "_df": object()},
+            )
+        )
+    return out
+
+
+def _legacy_record(spark, store, name, run):
+    """A run record as Spark wrote it before appends bypassed Spark:
+    one parquet write job per table, with INT96 timestamps."""
+    row = _state._run_row(name, run)
+    spark.createDataFrame([row], _state.RUN_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(store.path)
+    xs = _state._xcom_rows(name, run)
+    spark.createDataFrame(xs, _state.XCOM_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(store.xcom_path)
+
+
+def _sorted_rows(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_state_append_reads_back_like_spark_written(spark, tmp_path):
+    new = RunStateStore(spark, str(tmp_path / "new"))
+    old = RunStateStore(spark, str(tmp_path / "old"))
+    for name in ("p1", "p2"):
+        for run in _recorded_runs():
+            new.record_run(Pipeline(name), run)
+            _legacy_record(spark, old, name, run)
+    assert len(_sorted_rows(new.runs())) == 6
+    assert _sorted_rows(new.runs()) == _sorted_rows(old.runs())
+    assert _sorted_rows(new.xcoms()) == _sorted_rows(old.xcoms())
+    assert new.latest("p1") == old.latest("p1")
+    assert new.latest("p1")["run_id"] == "r2"
+    assert new.task_statuses("p2", "r1") == old.task_statuses("p2", "r1")
+    assert new.task_statuses("p2", "r1")["b"] == {
+        "status": "failed", "attempts": 2, "elapsed_s": 9.25,
+        "error": "ValueError: boom",
+    }
+    for task in ("a", "b", "_df"):
+        for run_id in ("r0", "r1", None):
+            assert new.xcom_pull("p2", task, run_id=run_id, default="absent") == (
+                old.xcom_pull("p2", task, run_id=run_id, default="absent")
+            )
+    assert new.xcom_pull("p1", "a") == {"n": 2}
+    assert new.xcom_pull("p1", "b", run_id="r1") == [1, "x"]
+    assert new.xcom_pull("p1", "_df", default="absent") == "absent"
+    assert _sorted_rows(new.run_stats()) == _sorted_rows(old.run_stats())
+    assert _sorted_rows(new.sla_misses("p1", 5.0)) == _sorted_rows(
+        old.sla_misses("p1", 5.0)
+    )
+    assert [r["run_id"] for r in new.sla_misses("p1", 5.0).collect()] == ["r1", "r2"]
+
+
+def test_state_started_round_trips_in_utc(spark, tmp_path):
+    store = RunStateStore(spark, str(tmp_path / "tz"))
+    # 18:04:05.25 at +05:30 is 12:34:05.25 UTC
+    ist = dt.timezone(dt.timedelta(hours=5, minutes=30))
+    started = dt.datetime(2026, 3, 1, 18, 4, 5, 250000, tzinfo=ist)
+    run = PipelineRun("r", "success", {}, started, 1.0, outputs={"t": 1})
+    store.record_run(Pipeline("tz"), run)
+    epoch_us = (started - dt.datetime(1970, 1, 1, tzinfo=UTC)) // dt.timedelta(
+        microseconds=1
+    )
+    fmt = "yyyy-MM-dd HH:mm:ss.SSS"
+    got = store.runs().select(
+        F.unix_micros("started"), F.date_format("started", fmt)
+    ).first()
+    assert tuple(got) == (epoch_us, "2026-03-01 12:34:05.250")
+    got = store.xcoms().select(
+        F.unix_micros("recorded"), F.date_format("recorded", fmt)
+    ).first()
+    assert tuple(got) == (epoch_us, "2026-03-01 12:34:05.250")
+
+
+def test_state_mixed_legacy_and_new_files_read_and_vacuum(spark, tmp_path):
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    store = RunStateStore(spark, str(tmp_path / "mixed"))
+    runs = _recorded_runs()
+    _legacy_record(spark, store, "p", runs[0])
+    for run in runs[1:]:
+        store.record_run(Pipeline("p"), run)
+    files = glob.glob(os.path.join(store.path, "*.parquet"))
+    started_types = {
+        pq.ParquetFile(f).metadata.schema.column(3).physical_type for f in files
+    }
+    assert started_types == {"INT96", "INT64"}  # really one file of each
+    assert sorted(r["run_id"] for r in store.runs().collect()) == ["r0", "r1", "r2"]
+    assert store.latest("p")["run_id"] == "r2"
+    assert store.xcom_pull("p", "a", run_id="r0") == {"n": 0}
+    assert store.run_stats().first()["n_runs"] == 3
+    # 14:01 with 90 min retention: the cutoff 12:31 drops r0 (12:00)
+    now = runs[2].started + dt.timedelta(minutes=1)
+    kept = store.vacuum(dt.timedelta(minutes=90), now=now)
+    assert kept == 2
+    assert len(glob.glob(os.path.join(store.path, "*.parquet"))) == 1
+    assert sorted(r["run_id"] for r in store.runs().collect()) == ["r1", "r2"]
+    assert store.xcom_pull("p", "a", run_id="r0", default="gone") == "gone"
+    assert store.xcom_pull("p", "a") == {"n": 2}
+
+
+def test_state_hidden_temp_file_is_never_read(spark, tmp_path, monkeypatch):
+    import os
+
+    store = RunStateStore(spark, str(tmp_path / "torn"))
+    runs = _recorded_runs()
+    store.record_run(Pipeline("p"), runs[0])
+
+    # an append stopped before its rename leaves a complete file under
+    # its temp name; one stopped mid-write leaves a torn file
+    def killed(src, dst):
+        raise OSError("killed before rename")
+
+    monkeypatch.setattr(_state.os, "replace", killed)
+    with pytest.raises(OSError, match="killed"):
+        store.record_run(Pipeline("p"), runs[1])
+    monkeypatch.undo()
+    left = [f for f in os.listdir(store.path) if f.endswith(".tmp")]
+    assert len(left) == 1 and left[0].startswith(".")
+    for d in (store.path, store.xcom_path):
+        with open(os.path.join(d, ".part-torn.parquet.tmp"), "wb") as f:
+            f.write(b"PAR1\x00torn")
+    assert [r["run_id"] for r in store.runs().collect()] == ["r0"]
+    assert store.latest("p")["run_id"] == "r0"
+    assert store.run_stats().first()["n_runs"] == 1
+    assert store.xcom_pull("p", "a") == {"n": 0}
 
 
 # ---------------------------------------------------------------------------

@@ -454,6 +454,88 @@ def test_ingest_pipeline_two_batches(spark, tmp_path):
     assert spark.read.parquet(hist).count() == 3
 
 
+# ---------------------------------------------------------------------------
+# Cache lifetime: a pipeline run leaves no cached frame behind, on the
+# success and the failure path (an hourly run over new documents would
+# otherwise pin more executor memory every run)
+# ---------------------------------------------------------------------------
+
+
+def _corpus(spark, first_id: int, topic: str):
+    from pyspark.sql import functions as F
+
+    base = (
+        f"a long and reasonable english text about {topic} that keeps the "
+        "stopword ratio and the word lengths in a sane band so the "
+        "quality gate is happy with it overall"
+    )
+    rows = [
+        (first_id, base),
+        (first_id + 1, base),  # exact dup
+        (first_id + 2, base.replace("reasonable", "sensible")),  # near dup
+        (first_id + 3, f"{topic} is discussed here in a second document "
+                       "that shares nothing else with the first one at all"),
+    ]
+    return spark.createDataFrame(rows, ["doc_id", "text"]).withColumn(
+        "doc_id", F.col("doc_id").cast("bigint")
+    )
+
+
+def test_corpus_pipeline_releases_its_caches_across_corpora(
+    spark, tmp_path, persisted_ids
+):
+    from airflow_spark.pipelines.corpus import build_corpus_pipeline
+
+    params = {"min_quality": 0.3, "near_dup_threshold": 0.6}
+    for i, topic in enumerate(["engines", "gardening"]):
+        docs = _corpus(spark, 100 * i, topic)
+        before = persisted_ids()
+        p = build_corpus_pipeline(lambda ctx: docs, str(tmp_path / f"out{i}"))
+        run = p.test(spark, params=params)
+        assert run.ok, {k: (v.status, v.error) for k, v in run.tasks.items()}
+        assert run.outputs["near_dedup"]["n_after_near"] == 2
+        assert persisted_ids() - before == set(), f"run {i} leaked"
+
+
+def test_corpus_pipeline_releases_its_caches_when_a_task_fails(
+    spark, tmp_path, monkeypatch, persisted_ids
+):
+    from airflow_spark.operators import text
+    from airflow_spark.pipelines.corpus import build_corpus_pipeline
+
+    def broken(df):
+        raise RuntimeError("scorer down")
+
+    monkeypatch.setattr(text, "with_quality_score", broken)
+    docs = _corpus(spark, 0, "engines")
+    before = persisted_ids()
+    run = build_corpus_pipeline(lambda ctx: docs, str(tmp_path / "out")).test(
+        spark, params={"near_dup_threshold": 0.6}
+    )
+    assert run.tasks["near_dedup"].status == "success"
+    assert run.tasks["quality_filter"].status == "failed"
+    assert persisted_ids() - before == set()
+
+
+def test_ingest_pipeline_releases_fresh_when_publish_fails(
+    spark, tmp_path, monkeypatch, persisted_ids
+):
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from airflow_spark.pipelines.corpus import build_ingest_pipeline
+
+    def refused(self, path, *a, **kw):
+        raise OSError("history store refused the write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", refused)
+    docs = _corpus(spark, 0, "engines")
+    before = persisted_ids()
+    run = build_ingest_pipeline(lambda ctx: docs, str(tmp_path / "hist")).test(spark)
+    assert run.tasks["dedup_vs_history"].status == "success"
+    assert run.tasks["publish"].status == "failed"
+    assert persisted_ids() - before == set()
+
+
 def test_training_data_pipeline_bpe_token_budget(spark, tmp_path):
     """tokenizer='bpe': packs respect a REAL subword-token budget —
     every pack's summed n_tokens (excluding oversized single docs)
