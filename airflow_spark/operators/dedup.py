@@ -29,7 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.text import char_shingles, tokens_ws
 from .graph import _materialize_truncated, _TruncatedFrame
@@ -289,8 +288,11 @@ def dedup_minhash(
     num_bands: int = 32,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard_est ≥ threshold),
-    returned persisted and materialized; the caller owns that cache.
+    """Near-duplicate pairs (id_a < id_b, jaccard_est ≥ threshold).
+
+    Eager: the call runs a Spark job right away and returns the pairs
+    persisted and materialized. The caller owns that cache and
+    ``unpersist()``s it when done.
 
     The signature frame feeds the banding AND both sides of the
     verification join — persist it so the shingle+128-min aggregation
@@ -759,29 +761,6 @@ def _write_sig_version(store_path: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-#: symmetric edge rows up to which :func:`dedup_clusters` runs its
-#: rounds on the driver: there a small pair graph costs microseconds,
-#: where the distributed loop pays ~20 Spark jobs of fixed cost
-_LOCAL_MAX_EDGES = 20_000
-
-
-def _propagate_local(edges: list, max_iters: int) -> tuple[dict, bool]:
-    """The rounds of :func:`dedup_clusters` over collected symmetric
-    edges: the same labels after the same number of rounds, so the
-    convergence contract is unchanged. Returns (labels, converged)."""
-    nbrs: dict = {}
-    for a, b in edges:
-        nbrs.setdefault(a, [a]).append(b)  # self-loop first
-    label = {v: v for v in nbrs}
-    for _ in range(max_iters):
-        prop = {v: min(label[u] for u in us) for v, us in nbrs.items()}
-        new = {v: min(c, prop[c]) for v, c in prop.items()}
-        if new == label:
-            return new, True
-        label = new
-    return label, False
-
-
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 20,
@@ -806,9 +785,7 @@ def dedup_clusters(
     changed labels). If the fixpoint is not reached within
     ``max_iters``, partial clusters would silently retain duplicates —
     so that raises unless ``require_convergence=False`` (then it warns
-    and returns the partial labels). A graph of at most
-    ``_LOCAL_MAX_EDGES`` symmetric edges runs the same rounds on the
-    driver after the edge checkpoint (:func:`_propagate_local`).
+    and returns the partial labels).
 
     ``pairs_distinct=True`` skips the defensive ``distinct`` on the
     symmetric edge frame: a canonical ``id_a < id_b`` pair list that is
@@ -838,19 +815,6 @@ def dedup_clusters(
     if not pairs_distinct:
         sym_raw = sym_raw.distinct()
     sym = _materialize_truncated(sym_raw)
-    head = sym.limit(_LOCAL_MAX_EDGES + 1).collect()
-    if len(head) <= _LOCAL_MAX_EDGES:
-        id_type = sym.schema["id_a"].dataType
-        sym.unpersist()
-        label, converged = _propagate_local(head, max_iters)
-        if not converged:
-            _unconverged(max_iters, require_convergence)
-        return pairs.sparkSession.createDataFrame(
-            list(label.items()),
-            T.StructType(
-                [T.StructField("id", id_type), T.StructField("cluster", id_type)]
-            ),
-        )
     # SELF-LOOP FOLD: append one (id, id) row per node so the per-round
     # neighbor-min aggregate sees the node's OWN label through its
     # self-loop — least(own, nbr_min) then needs no |V|-sized left join
@@ -939,33 +903,26 @@ def dedup_clusters(
             converged = True
             break
     if not converged:
-        try:
-            _unconverged(max_iters, require_convergence)
-        except RuntimeError:
+        msg = (
+            f"dedup_clusters did not reach a fixpoint in {max_iters} "
+            "iterations (a component has diameter > max_iters); the "
+            "partial labels would keep extra duplicates"
+        )
+        if require_convergence:
             sym.unpersist()
             loops.unpersist()
             if prev_round is not None:
                 prev_round.unpersist()
-            raise
+            raise RuntimeError(msg + " — raise max_iters")
+        import warnings
+
+        warnings.warn(msg, stacklevel=2)
     # the returned labels read only the final round's checkpoint; the
     # edge checkpoints' blocks are consumed
     sym.unpersist()
     loops.unpersist()
     # labels.unpersist() releases that final checkpoint
     return _TruncatedFrame(labels, prev_round)
-
-
-def _unconverged(max_iters: int, require_convergence: bool) -> None:
-    msg = (
-        f"dedup_clusters did not reach a fixpoint in {max_iters} "
-        "iterations (a component has diameter > max_iters); the "
-        "partial labels would keep extra duplicates"
-    )
-    if require_convergence:
-        raise RuntimeError(msg + " — raise max_iters")
-    import warnings
-
-    warnings.warn(msg, stacklevel=3)
 
 
 def keep_representatives(

@@ -776,70 +776,53 @@ def test_dedup_clusters_long_chain_converges_logarithmically(spark):
     assert {r["cluster"] for r in out.collect()} == {1}
 
 
-def test_dedup_minhash_keeps_only_its_returned_pairs_cached(docs, persisted_ids):
-    before = persisted_ids()
-    # parameters no other test uses: an identical plan cached earlier
-    # would be reused instead of adding a cache
-    pairs = dedup.dedup_minhash(docs, threshold=0.45, num_hashes=64, num_bands=16)
-    # the signature frame is released; the materialized pairs remain
-    assert len(persisted_ids() - before) == 1
+def _is_cached(df) -> bool:
+    level = df.storageLevel  # looked up in the session's cache manager
+    return level.useMemory or level.useDisk
+
+
+def test_dedup_minhash_returns_cached_pairs_and_releases_signatures(docs):
+    # the signature plan dedup_minhash builds for these inputs (48
+    # hashes: no other test caches it)
+    sigs = dedup.minhash_signatures(docs, num_hashes=48)
+    pairs = dedup.dedup_minhash(docs, threshold=0.5, num_hashes=48, num_bands=16)
+    assert _is_cached(pairs)
+    assert not _is_cached(sigs)
     assert (0, 1) in {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     pairs.unpersist()
-    assert persisted_ids() - before == set()
+    assert not _is_cached(pairs)
 
 
-def _random_pair_graph(spark, seed: int):
+def test_dedup_clusters_releases_its_checkpoints_on_every_exit(
+    spark, persisted_ids
+):
     import random
 
-    rng = random.Random(seed)
-    pairs = {(i, i + 1) for i in range(1, 40)}  # one long chain
-    pairs |= {(100, 100 + k) for k in range(1, 8)}  # a star
+    rng = random.Random(1)
+    edges = {(i, i + 1) for i in range(1, 40)}  # one long chain
+    edges |= {(100, 100 + k) for k in range(1, 8)}  # a star
     for _ in range(60):  # random components among 200..260
         a, b = rng.sample(range(200, 260), 2)
-        pairs.add((min(a, b), max(a, b)))
-    return spark.createDataFrame(sorted(pairs), ["id_a", "id_b"])
-
-
-def _cluster_rounds(pairs) -> dict:
-    """Labels after 3 and 4 rounds (the chain is not yet closed) and at
-    the fixpoint, with every returned cache released."""
-    out = {}
-    for cap in (3, 4, 20):
-        if cap == 20:
-            labels = dedup.dedup_clusters(pairs, max_iters=cap)
-        else:
-            with pytest.warns(UserWarning, match="fixpoint"):
-                labels = dedup.dedup_clusters(
-                    pairs, max_iters=cap, require_convergence=False
-                )
-        out[cap] = sorted(map(tuple, labels.collect()))
-        labels.unpersist()
+        edges.add((min(a, b), max(a, b)))
+    pairs = spark.createDataFrame(sorted(edges), ["id_a", "id_b"])
+    before = persisted_ids()
+    # 3 rounds do not close the chain: partial labels, with a warning
+    with pytest.warns(UserWarning, match="fixpoint"):
+        partial = dedup.dedup_clusters(pairs, max_iters=3, require_convergence=False)
+    partial_rows = sorted(map(tuple, partial.collect()))
+    partial.unpersist()
     with pytest.raises(RuntimeError, match="fixpoint"):
         dedup.dedup_clusters(pairs, max_iters=3)
-    return out
-
-
-@pytest.mark.parametrize("seed", [1, 2])
-def test_dedup_clusters_driver_rounds_match_distributed(
-    spark, monkeypatch, persisted_ids, seed
-):
-    pairs = _random_pair_graph(spark, seed)
-    before = persisted_ids()
-    local = _cluster_rounds(pairs)
-    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", 0)
-    distributed = _cluster_rounds(pairs)
-    assert local == distributed
-    assert local[3] != local[20]  # the capped rounds really are partial
-    final = dict(local[20])
+    labels = dedup.dedup_clusters(pairs)
+    final = dict(map(tuple, labels.collect()))
+    labels.unpersist()
+    assert sorted(final.items()) != partial_rows
     assert {final[i] for i in range(1, 41)} == {1}
     assert {final[i] for i in range(100, 108)} == {100}
     assert persisted_ids() - before == set()
 
 
-def test_keep_representatives_unpersist_frees_the_components(
-    docs, monkeypatch, persisted_ids
-):
-    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", 0)
+def test_keep_representatives_unpersist_frees_the_components(docs, persisted_ids):
     pairs = dedup.dedup_minhash(docs, threshold=0.5, num_hashes=64, num_bands=16)
     before = persisted_ids()
     kept = dedup.keep_representatives(docs, pairs).persist()
